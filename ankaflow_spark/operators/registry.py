@@ -422,11 +422,12 @@ def op_dedup_survivors(engine, df: DataFrame, params: Dict[str, Any]) -> DataFra
     # view to it so later consumers (e.g. a report counting the pair
     # stage) read the file instead of re-executing the banding plan
     # (measured: 2.5 s per re-execution in dedup_ann_curation). Content
-    # is identical by construction; stages with extra columns or
-    # non-canonical names keep their original lazy view.
-    if (pair_left, pair_right) == ("doc_a", "doc_b") and set(
-        pairs_stage.columns
-    ) == {"doc_a", "doc_b"}:
+    # is identical by construction; stages with extra columns,
+    # non-canonical names or another column order keep their original
+    # lazy view (a `SELECT *` consumer sees the stage's own order).
+    if (pair_left, pair_right) == ("doc_a", "doc_b") and pairs_stage.columns == [
+        "doc_a", "doc_b"
+    ]:
         engine.register(params["pairs"], pairs, materialize=False)
     labels = (
         connected_components(
@@ -2357,7 +2358,6 @@ def op_band_index_build(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
     corpus snapshot; every daily batch then probes it via
     band_index_probe with zero Exchange on the corpus side. Returns
     the persisted band relation read back from the layout."""
-    from ..session import SparkEngine
     from .dedup import _D33_KEY_COLS, D33_INDEX_TABLE, spark_bands_inline_sql
 
     id_col = params.get("id_column", "doc_id")
@@ -2369,7 +2369,7 @@ def op_band_index_build(engine, df: DataFrame, params: Dict[str, Any]) -> DataFr
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).createOrReplaceTempView(view)
     bands = engine.spark.sql(spark_bands_inline_sql(view))
-    SparkEngine(engine.spark).write_bucketed(
+    engine.write_bucketed(
         bands, table, _D33_KEY_COLS, n_buckets=n_buckets,
         sort_cols=_D33_KEY_COLS,
     )

@@ -7,20 +7,26 @@ stages can reference it in SQL; ``pipeline`` stages loop a nested flow
 once per row of the previous stage (rows cross to the driver — bounded
 by design, the only collect in the engine).
 
-Scale notes: transforms stay lazy (Catalyst fuses across stages); only
-taps materialize (read-once semantics for side-effecting sources). A
-sink writes distributed output by default; ``single_file: true``
-coalesces to 1 partition for locator-compatible single-file output —
-documented as a small-result-only option.
+Scale notes: transforms stay lazy (Catalyst fuses across stages). A tap
+over parquet files stays lazy too when its plan is a pure
+function of the files, so consumers scan the files with column pruning
+and filter pushdown; it is materialized only if a later sink or ``COPY``
+overwrites a path it reads (consumers keep the pre-write rows). Every
+other tap materializes (read-once semantics for side-effecting sources
+such as REST and LLM). A sink writes distributed output by default;
+``single_file: true`` coalesces to 1 partition for locator-compatible
+single-file output — documented as a small-result-only option.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import re
 import tempfile
 import time
 from typing import Any, Dict, Optional
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
 
@@ -63,8 +69,9 @@ class Flow:
         self.renderer = Renderer()
         self.lastname: Optional[str] = None
         self._last_df: Optional[DataFrame] = None
-        # per-executed-stage (name, kind, seconds) — lazy stages record
-        # plan-build time, taps/sinks record real execution; bench.py's
+        # per-executed-stage (name, kind, seconds) — lazy stages (lazy
+        # file taps included) record plan-build time, materialized taps
+        # and sinks record real execution; bench.py's
         # PIPELINE section and users profiling a flow read this
         self.stage_timings: list = []
 
@@ -145,10 +152,48 @@ def _connector(flow: Flow, stage: Stage):
     return get_connector(rendered["kind"])(flow.engine, rendered, flow.variables)
 
 
+# clock reads are deterministic to Spark but differ per query
+_CLOCK_EXPR = re.compile(
+    r'expressions\.(?:CurrentTimestamp|CurrentDate|CurrentTime|Now|LocalTimestamp)"'
+)
+
+
+def replayable(conn, df: DataFrame) -> bool:
+    """Does re-running the tap's plan give the same rows? Only for the
+    connectors in ``REPLAYABLE_CONNECTIONS``, without a ``version`` +
+    ``key`` ranking (its pick among ties is arbitrary), and with no
+    nondeterministic expression or clock read in the analyzed plan."""
+    from ..sources.file import REPLAYABLE_CONNECTIONS
+
+    if not isinstance(conn, REPLAYABLE_CONNECTIONS) or conn.ranked():
+        return False
+    plan = df._jdf.queryExecution().analyzed()
+    return bool(plan.deterministic()) and not _CLOCK_EXPR.search(plan.toJSON())
+
+
+def _replay_paths(read: str, df: DataFrame) -> list:
+    """The tap's read path, plus the directory of every file its plan
+    reads outside it (a ``read_parquet('...')`` in the tap query)."""
+    from ..sources.locator import paths_overlap
+
+    outside = {
+        os.path.dirname(f)
+        for f in map(unquote, df.inputFiles())  # percent-encoded URIs
+        if not paths_overlap(read, f)
+    }
+    return [read, *sorted(outside)]
+
+
 def handle_tap(flow: Flow, stage: Stage) -> DataFrame:
     conn = _connector(flow, stage)
     query = flow._render(stage.query) if stage.query else None
     df = conn.tap(query, stage)
+    if replayable(conn, df):
+        # a lazy view: consumers scan the files; a sink overwriting any
+        # of them materializes it first (handle_sink)
+        return flow.engine.register(
+            stage.name, df, replay_paths=_replay_paths(conn.read_path(), df)
+        )
     # eager materialization = the reference's CTAS tap semantics
     return flow.engine.register(stage.name, df, materialize=True)
 
@@ -161,6 +206,10 @@ def handle_transform(flow: Flow, stage: Stage) -> DataFrame:
 
 def handle_sink(flow: Flow, stage: Stage) -> Optional[DataFrame]:
     conn = _connector(flow, stage)
+    target = conn.sink_path() if hasattr(conn, "sink_path") else None
+    if target:
+        # lazy taps reading the target snapshot their rows before the write
+        flow.engine.materialize_readers(target)
     if stage.query:
         df = flow.engine.sql(flow._render(stage.query))
     elif flow.lastname:

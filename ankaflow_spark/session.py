@@ -11,8 +11,10 @@ Responsibilities:
   strings (spaces allowed); Spark temp views are identifier-restricted,
   so a deterministic mangling layer maps user names -> view names and
   rewrites references inside user SQL.
-* Register the ``Fn.*`` function surface at connect time (see
+* Register the ``Fn.*`` function surface once per session (see
   ``ankaflow_spark.functions``).
+* Track lazy file taps, so a write to a path one of them reads
+  materializes it first.
 
 Scale notes (100 TB design): the session defaults below are *local-mode*
 test values; on a real cluster the same builder honors
@@ -25,7 +27,7 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Dict, Optional
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -139,9 +141,12 @@ class SparkEngine:
     """Thin engine wrapper: view registry + SQL execution + name mangling.
 
     Analog of the reference's internal DB handle (a connection against
-    which every stage materializes a table/view). Here a *tap* registers
-    an eagerly-cached DataFrame (read-once semantics for side-effecting
-    sources) and a *transform* registers a lazy view.
+    which every stage materializes a table/view). Here a *transform*
+    registers a lazy view, and so does a *tap* that replays identically
+    from files (a ``replay_paths`` tap); every other tap registers an
+    eagerly-cached DataFrame (read-once semantics for side-effecting
+    sources). A ``Flow`` and its nested ``pipeline`` stages share one
+    engine, so the lazy-tap registry below spans all of them.
     """
 
     def __init__(self, spark: Optional[SparkSession] = None):
@@ -149,32 +154,60 @@ class SparkEngine:
         # user stage name -> mangled temp view name
         self._views: Dict[str, str] = {}
         self._cached: Dict[str, DataFrame] = {}
-        from .functions.fn import register_engine_functions
+        # lazy file taps: stage name -> (DataFrame, paths its plan reads)
+        self._lazy_taps: Dict[str, Tuple[DataFrame, List[str]]] = {}
+        from .functions.fn import ensure_engine_functions
 
-        register_engine_functions(self.spark)
+        ensure_engine_functions(self.spark)
 
     # -- registry ---------------------------------------------------------
-    def register(self, name: str, df: DataFrame, materialize: bool = False) -> DataFrame:
+    def register(
+        self,
+        name: str,
+        df: DataFrame,
+        materialize: bool = False,
+        replay_paths: Optional[List[str]] = None,
+    ) -> DataFrame:
         """Register ``df`` under stage name ``name``.
 
         ``materialize=True`` reproduces the reference's tap semantics
         (DuckDB CTAS = eager table): cache + trigger a count so that
         side-effecting sources (REST/LLM) execute exactly once. Plain
         transforms stay lazy views so Catalyst can fuse across stages.
+
+        ``replay_paths`` registers a lazy tap: a view whose plan is a
+        pure function of the files at those paths (globs allowed), so
+        every consumer scans them directly, with column pruning and
+        filter pushdown. A write to one of the paths materializes the
+        tap first (``materialize_readers``), so its consumers keep the
+        rows it had before the write.
         """
         view = mangle_view_name(name)
+        self._lazy_taps.pop(name, None)
         if materialize:
             df = df.cache()
             df.count()  # force; bounded by tap semantics, not a data-path collect
             self._cached[name] = df
+        elif replay_paths:
+            self._lazy_taps[name] = (df, list(replay_paths))
         df.createOrReplaceTempView(view)
         self._views[name] = view
         return df
+
+    def materialize_readers(self, path: str) -> None:
+        """Cache + count every lazy tap that reads ``path`` (or a path
+        under or above it) before something overwrites it."""
+        from .sources.locator import paths_overlap
+
+        for name, (df, paths) in list(self._lazy_taps.items()):
+            if any(paths_overlap(p, path) for p in paths):
+                self.register(name, df, materialize=True)
 
     def unregister(self, name: str) -> None:
         view = self._views.pop(name, None)
         if view:
             self.spark.catalog.dropTempView(view)
+        self._lazy_taps.pop(name, None)
         df = self._cached.pop(name, None)
         if df is not None:
             df.unpersist()
@@ -419,6 +452,7 @@ class SparkEngine:
         import shutil
 
         src, path, raw_opts = m.group(1).strip(), m.group(2), m.group(3) or ""
+        self.materialize_readers(path)
         from .sqlfront.rewrite import _split_top_level
 
         if src.startswith("("):
@@ -569,10 +603,7 @@ class SparkEngine:
             self.spark.sql(f"DROP TABLE IF EXISTS {table}")
             import shutil
 
-            warehouse = self.spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse"
-            ).removeprefix("file:")
-            shutil.rmtree(os.path.join(warehouse, table.lower()), ignore_errors=True)
+            shutil.rmtree(self.table_location(table), ignore_errors=True)
         # Pre-partition the write so every task holds WHOLE buckets.
         # Without this each input task emits one file per (partition
         # dir, bucket) it happens to see — n_tasks x n_dirs x n_buckets
@@ -613,6 +644,13 @@ class SparkEngine:
                 sort_cols = [sort_cols]
             writer = writer.sortBy(*sort_cols)
         writer.format("parquet").saveAsTable(table)
+
+    def table_location(self, table: str) -> str:
+        """Directory of managed catalog table ``table`` in the warehouse."""
+        warehouse = self.spark.conf.get(
+            "spark.sql.warehouse.dir", "spark-warehouse"
+        ).removeprefix("file:")
+        return os.path.join(warehouse, table.lower())
 
     # -- schema introspection (reference Schema.show / Fn.columns) --------
     def describe(self, name: str):

@@ -165,22 +165,29 @@ class BaseFileConnection:
     def _schema(self) -> Optional[T.StructType]:
         return fields_to_schema(self.spec.get("fields"))
 
+    def read_path(self) -> str:
+        """The path a tap reads. The reference wildcard-substitutes every
+        file tap's locator (trailing number group -> *) so partitioned
+        file families read as one glob; `locator_wildcard: false` opts
+        out per connection."""
+        return self._locator(use_wildcard=bool(self.spec.get("locator_wildcard", True)))
+
     def _read(self) -> DataFrame:
         reader = self.engine.spark.read
         schema = self._schema()
         if schema is not None:
             reader = reader.schema(schema)
         opts = dict(self.spec.get("options") or {})
-        # the reference wildcard-substitutes every file tap's locator
-        # (trailing number group -> *) so partitioned file families read
-        # as one glob; `locator_wildcard: false` opts out per connection
-        wildcard = bool(self.spec.get("locator_wildcard", True))
-        return self._do_read(reader, self._locator(use_wildcard=wildcard), opts)
+        return self._do_read(reader, self.read_path(), opts)
 
     def _do_read(self, reader, path: str, opts: Dict[str, Any]) -> DataFrame:
         raise NotImplementedError
 
     # -- tap ---------------------------------------------------------------
+    def ranked(self) -> bool:
+        """Does the tap keep only the latest ``version`` row per ``key``?"""
+        return bool(self.spec.get("version") and self.spec.get("key"))
+
     def tap(self, query: Optional[str], stage: Stage) -> DataFrame:
         from ..sqlfront.ranking import apply_ranking
         from ..sqlfront.validate import validate_simple_query
@@ -188,8 +195,7 @@ class BaseFileConnection:
         df = self._read()
         if not query:
             return apply_ranking(df, self.spec)
-        ranking = bool(self.spec.get("version") and self.spec.get("key"))
-        validate_simple_query(query, ranking_enabled=ranking)
+        validate_simple_query(query, ranking_enabled=self.ranked())
         # the user query references the source by placeholder; register a
         # stage-local view and run the query through the engine rewriter
         view = f"__tap_{hashlib.md5(stage.name.encode()).hexdigest()[:8]}"
@@ -225,7 +231,26 @@ class BaseFileConnection:
         return os.path.splitext(os.path.basename(loc))[0] or None
 
     # -- sink --------------------------------------------------------------
-    def _sink_readback(self, df: DataFrame, mode: str):
+    def _bucket_table(self) -> str:
+        """Catalog table of a ``bucket_by`` sink: ``table:`` if given,
+        else the locator basename."""
+        table = self.spec.get("table") or re.sub(
+            r"\W",
+            "_",
+            os.path.splitext(os.path.basename(self.spec.get("locator") or ""))[0],
+        )
+        if not table:
+            raise ValueError("bucket_by sink needs a `table:` or a locator name")
+        return table
+
+    def sink_path(self) -> Optional[str]:
+        """The path a sink writes: the locator, exactly (never
+        wildcarded), or the warehouse directory of a bucketed table."""
+        if self.spec.get("bucket_by"):
+            return self.engine.table_location(self._bucket_table())
+        return self._locator()
+
+    def _sink_readback(self, df: DataFrame, mode: str, path: str):
         """After an overwrite-mode parquet directory sink, the written
         files ARE the stage's relation — return a read-back DataFrame so
         downstream consumers (and the flow's terminal action) scan the
@@ -237,7 +262,13 @@ class BaseFileConnection:
         surface PRE-EXISTING rows the lazy plan does not contain), no
         partition_by (partition columns come back re-ordered/re-typed),
         and the read-back schema must match the written one field for
-        field — anything else falls back to the lazy plan unchanged."""
+        field — anything else falls back to the lazy plan unchanged.
+        The read-back scans exactly the written ``path``: the tap-side
+        locator wildcard would also pick up sibling files
+        (``report-2023.parquet`` beside ``report-2024.parquet``). A
+        read-back whose plan matches a cached relation (a tap of this
+        path, snapshotted before the write) would return that cache's
+        pre-write rows, so it is skipped too."""
         if self.format != "parquet":
             return None
         if mode not in ("overwrite", "error", "errorifexists"):
@@ -245,10 +276,12 @@ class BaseFileConnection:
         if self.spec.get("partition_by"):
             return None
         try:
-            rb = self._read()
-            if [(f.name, f.dataType) for f in rb.schema.fields] == [
-                (f.name, f.dataType) for f in df.schema.fields
-            ]:
+            opts = dict(self.spec.get("options") or {})
+            rb = self._do_read(self.engine.spark.read, path, opts)
+            level = rb.storageLevel
+            if not (level.useMemory or level.useDisk) and [
+                (f.name, f.dataType) for f in rb.schema.fields
+            ] == [(f.name, f.dataType) for f in df.schema.fields]:
                 return rb
         except Exception:
             pass
@@ -271,18 +304,9 @@ class BaseFileConnection:
                 raise ValueError(
                     f"bucket_by sink requires kind: parquet, got {self.format!r}"
                 )
-            table = self.spec.get("table") or re.sub(
-                r"\W",
-                "_",
-                os.path.splitext(
-                    os.path.basename(self.spec.get("locator") or "")
-                )[0],
-            )
-            if not table:
-                raise ValueError("bucket_by sink needs a `table:` or a locator name")
             self.engine.write_bucketed(
                 df,
-                table,
+                self._bucket_table(),
                 bucket_by,
                 n_buckets=int(self.spec.get("n_buckets", 16)),
                 sort_cols=self.spec.get("sort_by"),
@@ -327,7 +351,7 @@ class BaseFileConnection:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             self._do_write(writer, path)
-        return self._sink_readback(df, mode)
+        return self._sink_readback(df, mode, path)
 
     def _do_write(self, writer, path: str) -> None:
         getattr(writer, self.format)(path)
@@ -425,6 +449,13 @@ class JSONConnection(BaseFileConnection):
         writer.json(path)  # NDJSON, matching the reference's JSON sink
 
 
+#: connectors whose tap a flow may keep as a lazy view (plans/flow.py):
+#: re-reading the files gives the same rows. CSV and JSON taps stay
+#: cached: each consumer would parse the text again, and Spark refuses a
+#: query on a raw text scan that references only ``_corrupt_record``.
+REPLAYABLE_CONNECTIONS = (ParquetConnection,)
+
+
 class FileConnection(BaseFileConnection):
     """Pandas-format files (XLSX/XML/HTML/TXT): driver-side pandas read,
     then distribute. Same small-file path as the reference (file.py:121-169).
@@ -504,6 +535,9 @@ class VariableConnection(BaseFileConnection):
             df.createOrReplaceTempView(view)
             return self.engine.sql(query.replace(f'"{name}"', view))
         return df
+
+    def sink_path(self) -> Optional[str]:
+        return None  # writes a variable, not a file
 
     def sink(self, df: DataFrame, stage: Stage) -> None:
         name = self._locator()

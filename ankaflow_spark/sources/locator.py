@@ -16,6 +16,8 @@ Rules:
 
 from __future__ import annotations
 
+import fnmatch
+import os
 import re
 from dataclasses import dataclass
 from typing import Optional
@@ -40,6 +42,26 @@ def wildcardize(name: str) -> str:
     preserving the separator so the glob still matches the file family);
     names without a trailing number pass through unchanged."""
     return _WILDCARD_RE.sub(r"\1*", name)
+
+
+def _path_parts(uri: str) -> list:
+    """Scheme (``""`` for the local filesystem) + path components."""
+    uri = normalize_scheme(re.sub(r"^file:", "", uri))
+    m = _SCHEME_RE.match(uri)
+    scheme, rest = (m.group(0).lower(), uri[m.end():]) if m else ("", os.path.abspath(uri))
+    return [scheme] + [p for p in rest.split("/") if p]
+
+
+def paths_overlap(read: str, written: str) -> bool:
+    """Can writing ``written`` replace or delete a file that a read of
+    ``read`` (a glob allowed) lists? Yes when their common leading
+    components match — equal paths, one under the other, or the glob
+    matching the written path, an ancestor of it or one of its files.
+    Hadoop's ``{a,b}`` alternation is taken to match anything."""
+    return all(
+        "{" in r or fnmatch.fnmatchcase(w, r)
+        for r, w in zip(_path_parts(read), _path_parts(written))
+    )
 
 
 @dataclass

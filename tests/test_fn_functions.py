@@ -227,3 +227,29 @@ def test_fn_calendar_and_columns_in_sql(engine):
     engine.register("Cols Demo", engine.spark.sql("SELECT 1 AS a, 'x' AS b"))
     rows = engine.sql("SELECT * FROM Fn.columns('Cols Demo') ORDER BY column_name").collect()
     assert [(r["column_name"], r["data_type"]) for r in rows] == [("a", "int"), ("b", "string")]
+
+
+def test_engine_registers_fn_library_once_per_session(spark, monkeypatch):
+    """A second engine on a session that already has the library issues
+    no CREATE FUNCTION; an engine on a new session still registers it."""
+    from ankaflow_spark.session import SparkEngine
+
+    first = SparkEngine(spark)
+    issued = []
+    real_sql = spark.sql
+
+    def recording_sql(query, *args, **kwargs):
+        issued.append(query)
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", recording_sql)
+    second = SparkEngine(spark)
+    monkeypatch.undo()
+    assert not [q for q in issued if "FUNCTION" in q.upper()]
+    probe = "SELECT Fn.validate_gt(5.0, 1.0, true) AS v"
+    for engine in (first, second):
+        assert engine.sql(probe).collect()[0]["v"] == 5.0
+
+    fresh = spark.newSession()
+    assert not fresh.catalog.functionExists("fn_validate_gt")
+    assert SparkEngine(fresh).sql(probe).collect()[0]["v"] == 5.0

@@ -293,6 +293,41 @@ def test_dedup_survivors_stage(engine, sf_dir):
     assert df.groupBy("cluster_id").count().filter("count > 1").count() == 0
 
 
+def test_dedup_survivors_keeps_reordered_pair_stage(engine, sf_dir):
+    """A pairs stage selected as (doc_b, doc_a) is not rebound to the
+    (doc_a, doc_b) connected-components image: a later SELECT * keeps
+    the stage's own column order."""
+    flow = Flow(
+        Stages.loads(f"""
+- kind: tap
+  name: docs
+  connection: {{kind: parquet, locator: {sf_dir}/documents.parquet}}
+- kind: operator
+  name: scored
+  op: quality_score
+  params: {{text_column: text}}
+- kind: operator
+  name: raw_pairs
+  op: minhash_pairs
+  input: docs
+  params: {{id_column: doc_id, text_column: text}}
+- kind: transform
+  name: pairs
+  query: SELECT doc_b, doc_a FROM raw_pairs
+- kind: operator
+  name: survivors
+  op: dedup_survivors
+  input: scored
+  params: {{pairs: pairs, id_column: doc_id, score_column: quality_score}}
+- kind: transform
+  name: pair_echo
+  query: SELECT * FROM pairs
+"""),
+        engine=engine,
+    )
+    assert flow.run().columns == ["doc_b", "doc_a"]
+
+
 def test_vocab_and_normalized_dedup_stages(engine, sf_dir):
     flow = Flow(
         Stages.loads(f"""

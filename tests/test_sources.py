@@ -47,6 +47,29 @@ def test_parquet_single_file_roundtrip(engine, tmp_path):
     assert {r["name"] for r in df.collect()} == {f"User {i}" for i in range(1, 6)}
 
 
+def test_sink_readback_reads_only_the_written_file(engine, tmp_path):
+    """The read-back of a sink to report-2024.parquet scans that file
+    only: the tap-side locator wildcard (report-*.parquet) would add the
+    rows of a sibling report-2023.parquet."""
+    import pandas as pd
+
+    pd.DataFrame({"id": [100, 101, 102]}).to_parquet(tmp_path / "report-2023.parquet")
+    flow = Flow(
+        Stages.loads(f"""
+- kind: internal
+  name: seed
+  query: SELECT CAST(id AS BIGINT) AS id FROM (SELECT explode(sequence(1, 5)) AS id)
+- kind: sink
+  name: write
+  connection:
+    kind: parquet
+    locator: {tmp_path / "report-2024.parquet"}
+"""),
+        engine=engine,
+    )
+    assert sorted(r["id"] for r in flow.run().collect()) == [1, 2, 3, 4, 5]
+
+
 def test_parquet_directory_output(engine, tmp_path):
     path = tmp_path / "out__dir__"
     flow = Flow(

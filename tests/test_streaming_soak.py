@@ -21,9 +21,7 @@ foreachbatch_merge_counts (st24/st25's counter lattices).
 Run at a different scale with SPARK_GRAFT_SOAK_SF_DIR.
 """
 
-import hashlib
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,28 +38,28 @@ pytestmark = [
 ]
 
 
-def _stage_n_files(spark, table: str, range_col: str):
+@pytest.fixture(scope="module")
+def stage_n_files(spark, tmp_path_factory):
     """Stage a table as N_FILES range-partitioned parquet files so a
     maxFilesPerTrigger=1 reader executes N_FILES real micro-batches in
-    arrival order (ascending range_col mimics a time-sliced ingest)."""
+    arrival order (ascending range_col mimics a time-sliced ingest).
+    Each (table, range_col) is staged once per run, under pytest's
+    per-run temp dir: nothing is reused from an earlier run."""
     from ankaflow_spark.operators.tables import load_tables
 
-    t = load_tables(spark, SOAK_SF_DIR)
-    staged = os.path.join(
-        tempfile.gettempdir(),
-        "ankaflow_soak_"
-        + hashlib.md5(f"{SOAK_SF_DIR}:{table}:{N_FILES}".encode()).hexdigest()[:10],
-    )
-    success = os.path.join(staged, "_SUCCESS")
-    src = os.path.join(SOAK_SF_DIR, f"{table}.parquet")
-    fresh = os.path.exists(success) and (
-        os.path.getmtime(success) >= os.path.getmtime(src)
-    )
-    if not fresh:
-        t[table].repartitionByRange(N_FILES, range_col).write.mode(
-            "overwrite"
-        ).parquet(staged)
-    return staged, spark.read.parquet(staged).schema
+    root = tmp_path_factory.mktemp("soak_staging")
+    staged = {}
+
+    def stage(table: str, range_col: str):
+        if (table, range_col) not in staged:
+            t = load_tables(spark, SOAK_SF_DIR)
+            path = str(root / f"{table}_by_{range_col}")
+            t[table].repartitionByRange(N_FILES, range_col).write.parquet(path)
+            staged[table, range_col] = path
+        path = staged[table, range_col]
+        return path, spark.read.parquet(path).schema
+
+    return stage
 
 
 def _drive_with_progress(
@@ -110,7 +108,7 @@ def _assert_wall_flat(walls, label):
 
 
 @pytest.mark.parametrize("provider", [None, "rocksdb"])
-def test_soak_st22_sessionizer_state_bounded(spark, provider):
+def test_soak_st22_sessionizer_state_bounded(spark, stage_n_files, provider):
     """applyInPandasWithState gap-closure sessionizer (st22's state):
     state is 3 longs per LIVE KEY — bounded by |users|, flat once every
     user has appeared, regardless of trigger count. Parametrized over
@@ -125,7 +123,7 @@ def test_soak_st22_sessionizer_state_bounded(spark, provider):
         stream_tap,
     )
 
-    staged, schema = _stage_n_files(spark, "events", "ts")
+    staged, schema = stage_n_files("events", "ts")
     n_users = spark.read.parquet(staged).select("user_id").distinct().count()
     stream = stream_tap(spark, staged, schema, max_files_per_trigger=1)
     sessions = sessionize_stateful(stream, gap_minutes=30, watermark="3650 days")
@@ -148,7 +146,7 @@ def test_soak_st22_sessionizer_state_bounded(spark, provider):
     globals().setdefault("_SOAK_RESULTS", {})[name] = rows
 
 
-def test_soak_st21_native_session_window_grows(spark):
+def test_soak_st21_native_session_window_grows(spark, stage_n_files):
     """CONTRAST (the documented growth class): st21's complete-mode
     session_window keeps EVERY session in the state store, so state
     grows with the stream — the leak shape the bounded family avoids.
@@ -156,7 +154,7 @@ def test_soak_st21_native_session_window_grows(spark):
     bounded-state claims above are being tested against a strawman."""
     from ankaflow_spark.streaming.stream import stream_tap
 
-    staged, schema = _stage_n_files(spark, "events", "ts")
+    staged, schema = stage_n_files("events", "ts")
     stream = stream_tap(spark, staged, schema, max_files_per_trigger=1)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -201,8 +199,12 @@ def test_soak_st21_native_session_window_grows(spark):
          "SELECT COUNT(*) FROM (SELECT DISTINCT event_type, "
          "CAST(floor(CAST(value AS DECIMAL(18,6)) * 100) AS BIGINT) div 500 "
          "FROM events)", None),
-        # st25: per-(snapshot, bin) PSI counters
-        ("st25_psi_cells", "events", "ts", ["snap", "bin"],
+        # st25: per-(snapshot, bin) PSI counters. Staged on user_id, not
+        # ts: snap is a ts cut that splits events ~50/50, so ts-ordered
+        # arrival could not reach the snap=1 half of the lattice before
+        # batch ~12. user_id is uncorrelated with the cut (each user_id
+        # slice holds 49-52% snap=1 events at sf0.1).
+        ("st25_psi_cells", "events", "user_id", ["snap", "bin"],
          "SELECT COUNT(*) FROM (SELECT DISTINCT "
          "CAST(unix_micros(ts) >= 1705363200000000 AS INT), "
          "CAST(floor(CAST(value AS DECIMAL(18,6)) * 100) AS BIGINT) div 500 "
@@ -210,7 +212,7 @@ def test_soak_st21_native_session_window_grows(spark):
     ],
 )
 def test_soak_foreachbatch_state_flat(
-    spark, name, table, range_col, keys, bound_sql, value_col
+    spark, stage_n_files, tmp_path, name, table, range_col, keys, bound_sql, value_col
 ):
     """foreachbatch_merge_counts/_merge_sums (st23/st24/st25's state):
     the counter lattice is |key combinations| rows — saturates once
@@ -225,7 +227,7 @@ def test_soak_foreachbatch_state_flat(
 
     load_tables(spark, SOAK_SF_DIR)
     lattice_bound = spark.sql(bound_sql).collect()[0][0]
-    staged, schema = _stage_n_files(spark, table, range_col)
+    staged, schema = stage_n_files(table, range_col)
     stream = stream_tap(spark, staged, schema, max_files_per_trigger=1)
     if name == "st23_lattice":
         cells = stream.select(
@@ -249,7 +251,7 @@ def test_soak_foreachbatch_state_flat(
                 "CAST(floor(CAST(value AS DECIMAL(18,6)) * 100) AS BIGINT) div 500"
             ).alias("bin"),
         )
-    base = os.path.join(tempfile.gettempdir(), f"ankaflow_soak_state_{name}")
+    base = str(tmp_path / "state")
     metrics: list = []
     if value_col:
         foreachbatch_merge_sums(cells, keys, value_col, base, metrics=metrics)
